@@ -8,6 +8,8 @@ embarrassingly parallel at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1988,6 +1990,8 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------ phrase search
 
 _PHRASE = ("slow", "query")  # the searched phrase, as adjacent tokens
+# phrase tokens are spliced into an rlike pattern unescaped
+_PHRASE_TOKEN_RX = re.compile(r"^[A-Za-z0-9]+$")
 
 
 _PHRASE_SQL = f"""
@@ -2032,6 +2036,9 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sf0.001/sf0.01 parity green).  The REAL index shape at 100 TB is
     the persisted positional index — q_phrase_search_serve reads
     ~2/64 of a prebuilt postings table and shares this oracle."""
+    bad = [t for t in _PHRASE if not _PHRASE_TOKEN_RX.match(t)]
+    if bad:
+        raise ValueError(f"phrase tokens must match [A-Za-z0-9]+: {bad}")
     d = load(spark, sf_dir, "documents")
     # byte-scan containment prefilter: a whitespace token is a verbatim
     # substring of text (tokens() does not case-fold), so contains() is

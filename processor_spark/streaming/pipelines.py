@@ -190,14 +190,17 @@ def running_totals(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def _raise_if_unfinished(q, timeout_s: int, where: str) -> None:
-    """availableNow means "drain everything available"; a query still
-    active at the deadline is an INCOMPLETE pass, and the pre-r14
-    silent stop let every downstream consumer see partial results
-    (the file-spray probe lost 3 of 4 post-retrain chunks to it —
-    SCALE.md r14).  Uniform across all four runners: stop, then raise
-    loudly.  Checkpointed runners resume on re-call; un-checkpointed
-    ones must re-run from scratch."""
+def _drain(writer, timeout_s: int, where: str) -> None:
+    """Start ``writer`` with an availableNow trigger and wait up to
+    ``timeout_s`` for it to drain.  availableNow means "drain everything
+    available", so a query still active at the deadline is an
+    INCOMPLETE pass: stop it and raise loudly (the pre-r14 silent stop
+    let every downstream consumer see partial results — the file-spray
+    probe lost 3 of 4 post-retrain chunks to it, SCALE.md r14).
+    Checkpointed runners resume on re-call; un-checkpointed ones must
+    re-run from scratch."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination(timeout_s)
     if q.isActive:
         q.stop()
         raise TimeoutError(
@@ -212,29 +215,23 @@ def run_to_memory(
 ) -> None:
     """Drain a streaming DataFrame into a memory sink deterministically
     (availableNow processes all available input then stops)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        timeout_s,
+        name,
     )
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, name)
 
 
 def write_parquet_stream(df: DataFrame, path: str, checkpoint: str, timeout_s: int = 120):
     """Parquet sink with checkpointing (exactly-once file sink)."""
-    q = (
+    _drain(
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        timeout_s,
+        checkpoint,
     )
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, checkpoint)
 
 
 def run_foreach_batch(df: DataFrame, batch_fn, timeout_s: int = 120) -> None:
@@ -243,9 +240,11 @@ def run_foreach_batch(df: DataFrame, batch_fn, timeout_s: int = 120) -> None:
     writes).  batch_fn(batch_df, batch_id) runs on the driver with full
     batch-DataFrame powers; idempotency across retries is on the caller
     (batch_id is the dedup token)."""
-    q = df.writeStream.foreachBatch(batch_fn).trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, "<un-checkpointed foreachBatch>")
+    _drain(
+        df.writeStream.foreachBatch(batch_fn),
+        timeout_s,
+        "<un-checkpointed foreachBatch>",
+    )
 
 
 def run_foreach_batch_ckpt(
@@ -259,26 +258,16 @@ def run_foreach_batch_ckpt(
     query's offsets AND stateful-operator state live in ``checkpoint``,
     so a later call with the same location resumes exactly where the
     previous run stopped (the restart half of the stateful-sketch
-    equivalence tests).
-
-    A drain that is still active at ``timeout_s`` RAISES (r14): the
-    r14 file-spray probe's post-retrain ingest hit the old silent
-    stop — the call returned as if complete while 3 of 4 chunk files
-    sat unprocessed in the checkpoint, and every downstream consumer
-    (serve, retrain, the drift monitor's arrival histogram) silently
-    saw a partial pass.  availableNow means "drain everything
-    available"; not finishing is an error the caller must hear.  The
-    checkpoint is intact after the raise — re-calling resumes and
-    completes the drain."""
-    q = (
+    equivalence tests).  A drain still active at ``timeout_s`` raises
+    (:func:`_drain`); the checkpoint is intact after the raise, so
+    re-calling resumes and completes the drain."""
+    _drain(
         df.writeStream.foreachBatch(batch_fn)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        timeout_s,
+        checkpoint,
     )
-    q.awaitTermination(timeout_s)
-    _raise_if_unfinished(q, timeout_s, checkpoint)
 
 
 def type_totals_complete(events: DataFrame) -> DataFrame:
@@ -1626,25 +1615,17 @@ def _semdedup_state_fn(key, pdfs: Iterator[pd.DataFrame], state):
     emitted once, never retracted — a late low-id vector joins the
     standing membership for FUTURE probes only).
 
-    Vectorized (r15, VERDICT r14 next #4): the r11-r14 body looped
-    python-per-row with an np.concatenate PER ROW — O(occ²) memory
-    copy on top of O(occ²·d) interpreted distance work, and a HOT
-    CELL (a drifted 16k-row chunk concentrating in a few boundary
-    cells of the old epoch — exactly the drift-monitor scenario)
-    runs in ONE task: measured 38.9 s for a single 16k-row shifted
-    batch at 64×, 13.4 s vectorized (SCALE.md r15).  The sequential
-    rule is
-    order-free — dup_of(v) = min{id : id < v, dist ≤ eps} over
-    (state ∪ batch) — because candidates are exactly the lower-id
-    rows regardless of processing order, so it vectorizes as the
-    pair kernel's blocked decomposed-distance matmul with an id
-    mask: float64 over integers below 2^53 (the module-wide
-    exactness proof), bit-identical verdicts (equality pinned by
-    the streamed-equals-batch-twin tests and
-    test_semdedup_state_fn_hot_cell_vectorized)."""
+    The sequential rule is order-free — dup_of(v) = min{id : id < v,
+    dist ≤ eps} over (state ∪ batch) — so each batch is one
+    kernels.eps_scan of the new rows against state ∪ batch, reduced
+    under that id mask (kernels.py states the exactness and norm-band
+    contracts).  Equality with the sequential loop is pinned by
+    test_semdedup_state_fn_hot_cell_vectorized and the streamed ==
+    batch twins."""
     import numpy as np
 
-    from processor_spark.operators.similarity import SEMDEDUP_EPS, _assert_sub53
+    from processor_spark import kernels
+    from processor_spark.operators.similarity import SEMDEDUP_EPS
 
     cell = int(key[0])
     parts = [pdf for pdf in pdfs if len(pdf)]
@@ -1684,24 +1665,14 @@ def _semdedup_state_fn(key, pdfs: Iterator[pd.DataFrame], state):
     A = np.concatenate([mem, X_new]).astype(np.float64)
     dup = np.full(n, -1, dtype=np.int64)
     if len(all_ids) > 1 and d:
-        _assert_sub53(A)
-        X = X_new.astype(np.float64)
-        a2 = (A * A).sum(axis=1)
-        x2 = a2[len(mem_ids) :]
         best = np.full(n, np.iinfo(np.int64).max)
-        for s in range(0, n, 1024):
-            e = min(s + 1024, n)
-            D = x2[s:e, None] + a2[None, :] - 2.0 * (X[s:e] @ A.T)
-            hit = (D <= SEMDEDUP_EPS) & (all_ids[None, :] < ids_new[s:e, None])
-            ii, jj = np.nonzero(hit)
-            np.minimum.at(best, ii + s, all_ids[jj])
+        for qi, pj in kernels.eps_scan(A[len(mem_ids) :], A, SEMDEDUP_EPS):
+            m = all_ids[pj] < ids_new[qi]
+            np.minimum.at(best, qi[m], all_ids[pj[m]])
         found = best < np.iinfo(np.int64).max
         dup[found] = best[found]
     state.update(
-        (
-            np.concatenate([mem_ids, ids_new]).tolist(),
-            np.concatenate([mem, X_new]).flatten().tolist(),
-        )
+        (all_ids.tolist(), np.concatenate([mem, X_new]).flatten().tolist())
     )
     yield pd.DataFrame(
         {
@@ -1778,41 +1749,22 @@ TEXT_INGEST_SPREAD_MIN_DOCS = 4096
 TEXT_FOLD_MAX_GENS = 12
 
 
-# Driver-side two-level router construction — moved to
-# operators/similarity.py at r14 close (the batch numpy-routed path
-# shares it and operators must not import the streaming layer);
-# re-exported here so the streaming branches and tests keep their
-# name.
+# the list-API two-level router, used by the literal-CASE branch of
+# semdedup_assign_frame
 _router_groups = _sim._router_groups
 
 
 def _numpy_assign(
     vecs_vm: DataFrame, cents_rows: list, two_level: bool, rprobe: int = 1
 ) -> DataFrame:
-    """Closure-captured numpy argmin assignment (VERDICT r12 "what's
-    wrong": the literal-CASE router's plan grows linearly with nlist —
-    ~34k literals at derived nlist=512 — and Catalyst re-plans it every
-    micro-batch; this keeps the PLAN O(1) in nlist and moves the
-    distance work into one Arrow-batched mapInPandas).
-
-    Bit-exact with both literal branches: vm is integerized Spark-side
-    (identical _micro_arr projection), distances are exact — every
-    product ≤ (4.2e6)² ≈ 1.8e13 and every 64-dim sum ≤ 2.3e15 sits
-    below 2^53, so float64 matmul is integer-exact regardless of BLAS
-    summation order — and argmin over cid-sorted rows IS the (sq, cid)
-    min_by tie-break (first occurrence = lowest cid).  Two-level mode
-    reuses _router_groups, so routed cells equal _assign_cells
-    two_level=True exactly (asserted in tests/test_streaming.py).
-
-    ``rprobe`` (r14, VERDICT r13 missing #3): multi-probe routing for
-    the two-level branch — each vector's candidate set is the UNION of
-    its rprobe nearest router groups' fine centroids, mirroring
-    _assign_cells(rprobe=...) exactly (stable argsort over exact
-    float64 integer distances = the (gsq, gid) tie-break; the running
-    (sq, cid) min across probed groups = the union min_by).  Without
-    it, the past-NUMPY_FLAT_MAX_NLIST regime would hand streaming
-    SemDeDup's per-cell state exactly the rp1-imbalanced cells the r13
-    probe refuted (max_occ 2,896 vs 1,053 at rp3)."""
+    """(vec_id, vm, cell int) by the exact numpy argmin over the
+    centroid rows ``cents_rows`` — the batch wrapper
+    similarity._numpy_assign_frame over kernels.py, so streamed and
+    batch cells come from one kernel: flat, or two-level at ``rprobe``
+    (equal to _assign_cells(two_level=True) at the same rprobe).  The
+    plan stays O(1) in nlist, unlike the literal branches (VERDICT r12).
+    Raises ValueError for centroids outside the sub-2^53 contract or
+    cids that overflow the int32 cell column."""
     import numpy as np
 
     rows = sorted((int(cid), [int(e) for e in cm]) for cid, cm in cents_rows)
@@ -1826,104 +1778,9 @@ def _numpy_assign(
         )
     cids = np.asarray([cid for cid, _ in rows], dtype=np.int64)
     C = np.asarray([cm for _, cm in rows], dtype=np.float64)
-    if two_level:
-        cseeds, groups = _router_groups(cents_rows)
-        G = np.asarray([gm for _, gm in cseeds], dtype=np.float64)
-        gids = [gid for gid, _ in cseeds]
-        rp = min(rprobe, len(cseeds))  # same clamp as _assign_cells
-        # per-group fine matrices, cid-sorted (groups preserve cid order)
-        fine = {
-            gid: (
-                np.asarray([cid for cid, _ in mem], dtype=np.int64),
-                np.asarray([cm for _, cm in mem], dtype=np.float64),
-            )
-            for gid, mem in groups.items()
-            if mem
-        }
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["vm"].to_numpy()).astype(np.float64)
-            if not two_level:
-                # chunked rows + blocked centroid columns with a
-                # running (sq, cid) min — the batch twin's r14-close
-                # shape (similarity._numpy_flat_assign): per-task
-                # memory flat in nlist (a default 10k-row Arrow batch
-                # at the nlist ceiling would otherwise hold a 671 MB
-                # distance matrix), tie-break preserved because blocks
-                # ascend in cid and the min updates on strict <
-                c2 = (C * C).sum(axis=1)
-                cell = np.empty(len(X), dtype=np.int64)
-                blk = _sim.NUMPY_CENT_BLOCK
-                for lo in range(0, len(X), 2048):
-                    Xc = X[lo : lo + 2048]
-                    x2 = (Xc * Xc).sum(axis=1)[:, None]
-                    best_sq = np.full(len(Xc), np.inf)
-                    bcell = np.empty(len(Xc), dtype=np.int64)
-                    for cl in range(0, len(C), blk):
-                        Cb = C[cl : cl + blk]
-                        sq = (
-                            x2
-                            + c2[None, cl : cl + len(Cb)]
-                            - 2.0 * (Xc @ Cb.T)
-                        )
-                        loc = sq.argmin(axis=1)
-                        v = sq[np.arange(len(Xc)), loc]
-                        upd = v < best_sq
-                        best_sq[upd] = v[upd]
-                        bcell[upd] = cids[cl + loc[upd]]
-                    cell[lo : lo + len(Xc)] = bcell
-            else:
-                gsq = (
-                    (X * X).sum(axis=1)[:, None]
-                    + (G * G).sum(axis=1)[None, :]
-                    - 2.0 * (X @ G.T)
-                )
-                # top-rp router groups per vector: distances are exact
-                # integers in float64, and gids ascend with column
-                # index, so a STABLE argsort's first-occurrence order
-                # IS the (gsq, gid) tie-break
-                probed = np.argsort(gsq, axis=1, kind="stable")[:, :rp]
-                best_sq = np.full(len(X), np.inf)
-                cell = np.zeros(len(X), dtype=np.int64)
-                for j, gid in enumerate(gids):
-                    mask = (probed == j).any(axis=1)
-                    if not mask.any() or gid not in fine:
-                        continue
-                    mcids, M = fine[gid]
-                    Xm = X[mask]
-                    msq = (
-                        (Xm * Xm).sum(axis=1)[:, None]
-                        + (M * M).sum(axis=1)[None, :]
-                        - 2.0 * (Xm @ M.T)
-                    )
-                    loc = msq.argmin(axis=1)  # lowest cid within group
-                    gsqm = msq[np.arange(len(Xm)), loc]
-                    gcid = mcids[loc]
-                    idx = np.flatnonzero(mask)
-                    # groups iterate in ascending-gid order and each
-                    # group's cids are disjoint from every other's, so
-                    # strict < on ties keeps the lowest cid: equal sq
-                    # across groups resolves to the group seen first
-                    # only if its cid is lower — compare (sq, cid)
-                    upd = (gsqm < best_sq[idx]) | (
-                        (gsqm == best_sq[idx]) & (gcid < cell[idx])
-                    )
-                    best_sq[idx[upd]] = gsqm[upd]
-                    cell[idx[upd]] = gcid[upd]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "vm": pdf["vm"],
-                    "cell": pd.Series(cell, index=pdf.index).astype("int32"),
-                }
-            )
-
-    return vecs_vm.mapInPandas(
-        fn, schema="vec_id bigint, vm array<bigint>, cell int"
-    )
+    return _sim._numpy_assign_frame(
+        vecs_vm, cids, C, ("vm",), rprobe if two_level else None
+    ).select("vec_id", "vm", F.col("cell").cast("int").alias("cell"))
 
 
 def semdedup_assign_frame(

@@ -320,7 +320,7 @@ def test_router_groups_np_multiblock_equals_single(monkeypatch):
     included (rows 1/5/40/512/1023 duplicate row 0)."""
     import numpy as np
 
-    from processor_spark.operators.similarity import _router_groups_np
+    from processor_spark.kernels import router_groups as _router_groups_np
 
     rng = np.random.default_rng(11)
     nlist, d = 1024, 64

@@ -297,6 +297,29 @@ def test_connected_components_local_equals_distributed(spark):
     assert "impl" not in st_dist
 
 
+def test_connected_components_cap_zero_is_distributed_on_empty_edges(spark):
+    """local_max_edges=0 pins the distributed loop absolutely: an empty
+    edge set (0 <= 0) must not fall into the driver-local window."""
+    from processor_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame([], "src bigint, dst bigint")
+    stats = {}
+    got = connected_components(edges, stats=stats, local_max_edges=0).collect()
+    assert got == []
+    assert "impl" not in stats
+
+
+def test_phrase_search_rejects_regex_metachar_tokens(spark, monkeypatch):
+    """Phrase tokens are spliced into an rlike pattern unescaped, so a
+    token outside [A-Za-z0-9]+ must raise instead of matching as regex."""
+    from processor_spark.operators import text
+    from tests.conftest import SF_SMALL
+
+    monkeypatch.setattr(text, "_PHRASE", ("slow", "qu.ery"))
+    with pytest.raises(ValueError, match="phrase tokens"):
+        text.q_phrase_search(spark, SF_SMALL)
+
+
 def test_approx_count_distinct_within_declared_error(spark):
     """q_agg_approx is rows-only by contract (HLL sketches differ
     between engines) — so grade it on ACCURACY instead: every group's
